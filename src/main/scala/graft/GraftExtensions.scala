@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-import graft.functions.{CosineSimilarity, GraftFunctions, IntersectSorted, JaccardSorted, MinHashBands, NgramShingles, RollingHash, SimHash64}
+import graft.functions.GraftFunctions
 
 /** SparkSessionExtensions entry point: makes the engine's native expressions
   * AND the top-k-per-group planner strategy available to any session built
@@ -19,40 +19,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(_ => graft.plans.TopK.Planner)
     // retarget row_number-then-filter plans onto the native top-k operator
     ext.injectOptimizerRule(_ => graft.plans.RowNumberTopKRewrite)
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.cosineBuilder(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_jaccard_sorted"),
-      new ExpressionInfo(classOf[JaccardSorted].getName, "graft_jaccard_sorted"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.jaccardBuilder(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_intersect_sorted"),
-      new ExpressionInfo(classOf[IntersectSorted].getName, "graft_intersect_sorted"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.intersectBuilder(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash_bands"),
-      new ExpressionInfo(classOf[MinHashBands].getName, "graft_minhash_bands"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.minhashBandsBuilder(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "graft_rolling_hash"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.rollingHashBuilder(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[NgramShingles].getName, "graft_shingles"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.shinglesBuilder(exprs)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash64"),
-      (exprs: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        GraftFunctions.simhashBuilder(exprs)))
+    // the same table GraftFunctions.register installs
+    GraftFunctions.all.foreach { f =>
+      ext.injectFunction((new FunctionIdentifier(f.name),
+        new ExpressionInfo(f.exprClass.getName, f.name), f.builder))
+    }
   }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -108,114 +107,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Registration + Column-facing access (Spark 4 Columns wrap ColumnNodes, so
-  * custom expressions surface through the function registry + call_function).
-  */
-object GraftFunctions {
-  import org.apache.spark.sql.catalyst.expressions.Cast
-  import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
-
-  private def requireArity(name: String, exprs: Seq[Expression], n: Int): Unit =
-    if (exprs.length != n) throw new IllegalArgumentException(
-      s"$name requires exactly $n arguments, got ${exprs.length}")
-
-  /** Widen a numeric array argument to array<double> so callers can pass
-    * e.g. array<int>. float and double arrays pass through untouched —
-    * CosineSimilarity reads float elements natively (in-register widening),
-    * no per-row cast allocation. */
-  private[graft] def asNumericArray(e: Expression): Expression = e.dataType match {
-    case ArrayType(DoubleType, _) | ArrayType(FloatType, _) => e
-    case ArrayType(_, containsNull) => Cast(e, ArrayType(DoubleType, containsNull))
-    case _ => e // leave as-is; checkInputDataTypes reports the clear error
-  }
-
-  private[graft] def cosineBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_cosine", exprs, 2)
-    CosineSimilarity(asNumericArray(exprs(0)), asNumericArray(exprs(1)))
-  }
-
-  private[graft] def jaccardBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_jaccard_sorted", exprs, 2)
-    JaccardSorted(exprs(0), exprs(1))
-  }
-
-  private[graft] def intersectBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_intersect_sorted", exprs, 2)
-    IntersectSorted(exprs(0), exprs(1))
-  }
-
-  private def literalInt(name: String, e: Expression, arg: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(
-      s"$name requires a literal integer for $arg, got $other")
-  }
-
-  private[graft] def minhashBandsBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_minhash_bands", exprs, 3)
-    MinHashBands(exprs(0),
-      literalInt("graft_minhash_bands", exprs(1), "k"),
-      literalInt("graft_minhash_bands", exprs(2), "bands"))
-  }
-
-  private[graft] def rollingHashBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_rolling_hash", exprs, 1)
-    RollingHash(exprs(0))
-  }
-
-  private[graft] def shinglesBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_shingles", exprs, 2)
-    NgramShingles(exprs(0), literalInt("graft_shingles", exprs(1), "n"))
-  }
-
-  private[graft] def simhashBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_simhash64", exprs, 1)
-    SimHash64(exprs(0))
-  }
-
-  private[graft] def maxRunBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_max_run", exprs, 1)
-    MaxRunLength(exprs(0))
-  }
-
-  private[graft] def jaroWinklerBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_jaro_winkler", exprs, 2)
-    JaroWinkler(exprs(0), exprs(1))
-  }
-
-  private[graft] def l2sqBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_l2sq", exprs, 2)
-    L2SqLong(exprs(0), exprs(1))
-  }
-
-  private[graft] def dotlBuilder(exprs: Seq[Expression]): Expression = {
-    requireArity("graft_dotl", exprs, 2)
-    DotLong(exprs(0), exprs(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", cosineBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard_sorted", jaccardBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_intersect_sorted", intersectBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_minhash_bands", minhashBandsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rolling_hash", rollingHashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_shingles", shinglesBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_simhash64", simhashBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_max_run", maxRunBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaro_winkler", jaroWinklerBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_l2sq", l2sqBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dotl", dotlBuilder, "built-in")
-  }
 }

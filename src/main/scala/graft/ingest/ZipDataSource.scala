@@ -3,7 +3,6 @@ package graft.ingest
 import java.util
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -29,9 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    body at all — the listing already carried every non-content column.
   *
   * Usage: `spark.read.format("graft-zip").load(globOrPath)` →
-  * (archive string, entry string, size long, content binary). Flat-
-  * archive semantics match [[ZipSource]]/[[ZipExtract]] (entries with
-  * path separators are skipped by the listing); zip64 rejects loudly.
+  * (archive string, entry string, size long, content binary). The flat-
+  * archive rule, zip64 support and the per-entry CRC-32 check all come
+  * from [[ZipEntrySplits]]. `content` holds a whole entry in one array,
+  * so an entry over 2 GiB fails loudly there.
   *
   * Scaladoc-level comparison with the reference's approach
   * (/root/reference/src/main.rs:153-170 — whole archive unzipped
@@ -134,16 +134,15 @@ private[ingest] class ZipScan(path: String, required: StructType,
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    ZipEntrySplits.listEntries(spark, path)
+    ZipEntrySplits.listEntries(SparkSession.active.sparkContext.hadoopConfiguration, path)
       .filter(s => pushed.forall(ZipScanBuilder.matches(_, s)))
       .map(s => ZipEntryPartition(s): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // Configuration is not serializable: ship the session's hadoop conf
-    // as entries so fs impls/credentials reach the readers (same contract
-    // as ZipEntrySplits.expand)
+    // as entries so fs impls/credentials (spark.hadoop.*, s3a) reach the
+    // readers exactly as they reach the driver-side listing
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     val it = conf.iterator()
     val b = Seq.newBuilder[(String, String)]
@@ -166,11 +165,15 @@ private[ingest] case class ZipReaderFactory(
       override def get(): InternalRow = {
         done = true
         lazy val content: Array[Byte] = {
+          if (split.uncompressedSize > Int.MaxValue - 8)
+            throw new UnsupportedOperationException(
+              s"graft-zip: entry '${split.entry}' of ${split.archive} has " +
+                s"${split.uncompressedSize} bytes, past the 2 GiB limit of " +
+                "the content column")
           val conf = new Configuration(false)
           confEntries.foreach { case (k, v) => conf.set(k, v) }
-          val p = new Path(split.archive)
-          val fs = p.getFileSystem(conf)
-          ZipEntrySplits.readEntry(fs, split)
+          val in = ZipEntrySplits.openEntry(conf, split)
+          try in.readAllBytes() finally in.close()
         }
         // only the requested columns materialize — `content` inflates the
         // entry iff it was NOT pruned away

@@ -1,62 +1,15 @@
 package graft.ingest
 
-import java.io.ByteArrayOutputStream
-import java.util.zip.ZipInputStream
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Distributed zip expansion: `binaryFile` scan + a typed 1->N flatMap over
-  * `java.util.zip.ZipInputStream` — the Spark-native shape for the
-  * reference's download+unzip (main.rs:172-208 + 153-170) when there are
-  * MANY archives (each archive = one task; zip is not splittable, so
-  * parallelism comes from archive count, not archive size — SURVEY.md §7.4).
-  *
-  * Zip-slip/flat-archive semantics match ZipExtract: entries with path
-  * separators or traversal are skipped.
-  *
-  * The same `spark.read.format("binaryFile")` path works against an
-  * `s3a://bucket/prefix/` glob unchanged — credentials flow from the default
-  * AWS provider chain exactly as the reference's `aws_config::load_defaults`
-  * (main.rs:56-57); nothing here hardcodes a filesystem.
+/** Zipped CSV shards as one DataFrame. Entries come from the `graft-zip`
+  * reader ([[ZipDataSource]]: one partition per entry, CRC-checked, with
+  * the listing's flat-archive rule). The path is any Hadoop-FS glob — an
+  * `s3a://bucket/prefix` glob of zips works unchanged, with credentials from
+  * the default AWS provider chain exactly as the reference's
+  * `aws_config::load_defaults` (main.rs:56-57).
   */
 object ZipSource {
-
-  case class ZipEntryRow(archive: String, entry: String, content: Array[Byte])
-
-  def expand(spark: SparkSession, pathGlob: String): Dataset[ZipEntryRow] = {
-    import spark.implicits._
-    spark.read.format("binaryFile").load(pathGlob)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val zis = new ZipInputStream(new java.io.ByteArrayInputStream(bytes))
-        // close in a finally: ZipInputStream wraps an Inflater whose zlib
-        // buffers live OFF-HEAP — a ZipException from a corrupt archive
-        // (plus Spark's task retries of it) would otherwise leak native
-        // memory on long-lived executors until finalization
-        try {
-          val out = Seq.newBuilder[ZipEntryRow]
-          var entry = zis.getNextEntry
-          while (entry != null) {
-            val name = entry.getName
-            // flat-archive contract: any path separator disqualifies; a
-            // separator-free name cannot traverse, so ".." is only unsafe as
-            // the whole name (names like "a..b.csv" are legitimate)
-            val unsafe = name.contains("/") || name.contains("\\") || name == ".."
-            if (!entry.isDirectory && !unsafe) {
-              val bos = new ByteArrayOutputStream()
-              val buf = new Array[Byte](64 * 1024)
-              var n = zis.read(buf)
-              while (n >= 0) { bos.write(buf, 0, n); n = zis.read(buf) }
-              out += ZipEntryRow(path, name, bos.toByteArray)
-            }
-            zis.closeEntry()
-            entry = zis.getNextEntry
-          }
-          out.result()
-        } finally zis.close()
-      }
-  }
 
   /** Expand zipped CSV archives and parse the bodies — end-to-end
     * distributed (no driver-side temp files). All entries are assumed to be
@@ -74,9 +27,11 @@ object ZipSource {
     // each re-download and re-unzip every archive. The cached text lives
     // until the caller drops it (spark.catalog.clearCache() / unpersist on
     // the plan) — the price of keeping this API lazy.
-    val texts = expand(spark, pathGlob)
-      .filter(_.entry.toLowerCase.endsWith(".csv"))
-      .map(e => (e.entry, new String(e.content, java.nio.charset.StandardCharsets.UTF_8)))
+    val texts = spark.read.format("graft-zip").load(pathGlob)
+      .select("entry", "content").as[(String, Array[Byte])]
+      .filter(_._1.toLowerCase.endsWith(".csv"))
+      .map { case (entry, bytes) =>
+        (entry, new String(bytes, java.nio.charset.StandardCharsets.UTF_8)) }
       .cache()
     val header = texts.take(1).headOption.getOrElse(
       throw new IllegalArgumentException(

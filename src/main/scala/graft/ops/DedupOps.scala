@@ -58,6 +58,8 @@ object DedupOps {
     * before shuffling; at graded scale they ride as-is so the oracle
     * sees the exact join key. */
   private[ops] def minhashBucketsMd5(setFrame: DataFrame, k: Int, bands: Int): DataFrame = {
+    // bands take r = k / bands members each; a remainder would be dropped
+    require(k % bands == 0, s"minhash k=$k must be a multiple of bands=$bands")
     val r = k / bands
     // k MIN-AGGREGATE COLUMNS instead of a k-way row explode (optimization
     // r13, guide §2.3/§4). The previous shape exploded every (doc, token)

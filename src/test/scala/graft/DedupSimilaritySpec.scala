@@ -33,6 +33,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(pairs === Set((1L, 2L), (1L, 4L), (2L, 4L)))
   }
 
+  test("md5-family minhash rejects k not divisible by bands") {
+    assert(intercept[IllegalArgumentException] {
+      DedupOps.minhashNearDupPairsMd5(docs, k = 10, bands = 3)
+    }.getMessage.contains("multiple of bands"))
+  }
+
   test("md5-family chain cap: mega-clique emits 2m-3 pairs, keeps connectivity") {
     val m = 40
     val clique = (1 to m).map(i =>

@@ -70,13 +70,17 @@ class IngestSpec extends AnyFunSuite {
     add("good.csv", "a,b\n1,2")
     add("../evil.csv", "pwned")
     add("nested/deep.csv", "x")
+    add(".", "names the output directory itself")
     zos.close()
     val outDir = new File(dir, "unzipped")
-    val extracted = ZipExtract.toLocal(zipFile.getPath, outDir.getPath)
-    assert(extracted === Seq("good.csv"))
-    assert(new File(outDir, "good.csv").exists())
+    // cold path: the CSV is absent, so ensureCsv extracts the archive
+    IngestPipeline.ensureCsv(IngestPipeline.Config(
+      new File(outDir, "good.csv").getPath, Some(zipFile.getPath), "unused"))
+    assert(outDir.list().toSeq === Seq("good.csv"))
+    assert(Files.readString(new File(outDir, "good.csv").toPath) === "a,b\n1,2")
     assert(!new File(dir, "evil.csv").exists())
     assert(!new File(outDir, "evil.csv").exists())
+    assert(!new File(dir, "nested").exists() && !new File(outDir, "nested").exists())
   }
 
   test("warm path short-circuit: existing CSV is not re-extracted") {
@@ -86,7 +90,7 @@ class IngestSpec extends AnyFunSuite {
     IngestPipeline.ensureCsv(IngestPipeline.Config(csv.getPath, None, "unused"))
   }
 
-  test("distributed zip source: binaryFile + flatMap expansion") {
+  test("distributed zip source: graft-zip skips '..', expandCsv parses the rest") {
     val dir = tmpDir()
     val zipFile = new File(dir, "archive.zip")
     val zos = new ZipOutputStream(new FileOutputStream(zipFile))
@@ -97,8 +101,9 @@ class IngestSpec extends AnyFunSuite {
     zos.write("nope".getBytes("UTF-8"))
     zos.closeEntry()
     zos.close()
-    val entries = ZipSource.expand(spark, zipFile.getPath).collect()
-    assert(entries.map(_.entry).toSeq === Seq("part1.csv"))
+    val entries = spark.read.format("graft-zip").load(zipFile.getPath)
+      .select("entry").collect().map(_.getString(0))
+    assert(entries.toSeq === Seq("part1.csv"))
     val parsed = ZipSource.expandCsv(spark, zipFile.getPath)
     assert(parsed.count() === 5)
     assert(parsed.columns.length === 19)

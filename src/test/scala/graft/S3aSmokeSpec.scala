@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ingest.ZipSource
 
 /** Opt-in live-S3 smoke (round-5 verdict item 7): the engine's O1 parity —
   * reading the reference's S3 objects through s3a:// — is config-complete
@@ -11,13 +10,14 @@ import graft.ingest.ZipSource
   * test reports as canceled, never as passed. */
 class S3aSmokeSpec extends AnyFunSuite {
 
-  test("O1 live path: binaryFile zip expansion over an s3a:// prefix (env-gated)") {
+  test("O1 live path: graft-zip read over an s3a:// prefix (env-gated)") {
     val uri = sys.env.get("GRAFT_S3A_SMOKE_URI")
     assume(uri.isDefined,
       "set GRAFT_S3A_SMOKE_URI='s3a://bucket/prefix/*.zip' (and put " +
         "hadoop-aws + aws-java-sdk-bundle on the classpath) to run")
-    val rows = ZipSource.expand(TestSpark.spark, uri.get).limit(5).collect()
+    val rows = TestSpark.spark.read.format("graft-zip").load(uri.get)
+      .select("content").limit(5).collect()
     assert(rows.nonEmpty, s"no zip entries found under ${uri.get}")
-    assert(rows.forall(_.content.nonEmpty))
+    assert(rows.forall(_.getAs[Array[Byte]](0).nonEmpty))
   }
 }

@@ -1,15 +1,18 @@
 package graft
 
 import java.io.{File, FileOutputStream}
-import java.util.zip.{CRC32, ZipEntry, ZipOutputStream}
+import java.nio.{ByteBuffer, ByteOrder}
+import java.util.zip.{CRC32, ZipEntry, ZipFile, ZipOutputStream}
+
+import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import graft.ingest.{ZipEntrySplits, ZipSource}
+import graft.ingest.{IngestPipeline, ZipEntrySplits}
 
 class ZipSplitSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-  import spark.implicits._
+  private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
   private def tmpDir(): File = {
     val d = java.nio.file.Files.createTempDirectory("graft_zipsplit").toFile
@@ -41,37 +44,56 @@ class ZipSplitSpec extends AnyFunSuite {
     f
   }
 
-  test("split expansion equals stream expansion, byte for byte") {
+  /** The JDK's own reader as the reference: (entry -> bytes) of every
+    * flat, non-directory entry. */
+  private def jdkEntries(f: File): Map[String, Seq[Byte]] = {
+    val zf = new ZipFile(f)
+    try zf.entries().asScala
+      .filter(e => !e.isDirectory && !e.getName.contains("/"))
+      .map { e =>
+        val in = zf.getInputStream(e)
+        try e.getName -> in.readAllBytes().toSeq finally in.close()
+      }.toMap
+    finally zf.close()
+  }
+
+  private def graftZip(path: String): Map[String, Seq[Byte]] =
+    spark.read.format("graft-zip").load(path).collect()
+      .map(r => r.getAs[String]("entry") -> r.getAs[Array[Byte]]("content").toSeq).toMap
+
+  /** Messages of a throwable and all of its causes. */
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(e => Option(e.getMessage).toSeq ++ messages(e.getCause))
+
+  test("graft-zip over a glob equals java.util.zip.ZipFile, byte for byte") {
     val dir = tmpDir()
-    writeFixture(dir, "a.zip", entries = 6)
-    writeFixture(dir, "b.zip", entries = 3)
-    val glob = s"${dir.getAbsolutePath}/*.zip"
-    def norm(ds: org.apache.spark.sql.Dataset[ZipSource.ZipEntryRow]) = ds
-      .collect().map(r => (new File(r.archive.stripPrefix("file:")).getName,
-        r.entry, r.content.toSeq)).sortBy(t => (t._1, t._2)).toSeq
-    val bySplits = norm(ZipEntrySplits.expand(spark, glob))
-    val byStream = norm(ZipSource.expand(spark, glob))
-    assert(bySplits === byStream)
-    assert(bySplits.nonEmpty)
+    val a = writeFixture(dir, "a.zip", entries = 6)
+    val b = writeFixture(dir, "b.zip", entries = 3)
+    val rows = spark.read.format("graft-zip").load(s"${dir.getAbsolutePath}/*.zip")
+      .collect().map(r => (new File(r.getAs[String]("archive").stripPrefix("file:")).getName,
+        r.getAs[String]("entry"), r.getAs[Array[Byte]]("content").toSeq))
+    val got = rows.map(t => (t._1, t._2) -> t._3).toMap
+    val expect = Seq(a, b).flatMap(f => jdkEntries(f).map { case (e, c) => (f.getName, e) -> c }).toMap
+    assert(rows.length === got.size)
+    assert(got === expect)
     // stored + deflated both present, unsafe entries absent
-    assert(bySplits.exists(_._2 == "stored.txt"))
-    assert(!bySplits.exists(_._2.contains("/")))
+    assert(got.keySet.exists(_._2 == "stored.txt"))
+    assert(!got.keySet.exists(_._2.contains("/")))
   }
 
   test("one archive fans out to MANY tasks (the non-splittable-format fix)") {
     val dir = tmpDir()
     writeFixture(dir, "big.zip", entries = 12)
-    val ds = ZipEntrySplits.expand(spark, s"${dir.getAbsolutePath}/big.zip")
-    val parts = ds.select(org.apache.spark.sql.functions.spark_partition_id())
-      .distinct().as[Int].collect()
+    val df = spark.read.format("graft-zip").load(s"${dir.getAbsolutePath}/big.zip")
+    val parts = df.select(spark_partition_id()).distinct().collect()
     assert(parts.length > 1, s"expected >1 task, got ${parts.length}")
-    assert(ds.count() === 13) // 12 deflated + 1 stored; nested+dir skipped
+    assert(df.count() === 13) // 12 deflated + 1 stored; nested+dir skipped
   }
 
   test("driver listing carries offsets, not content; entries parse correctly") {
     val dir = tmpDir()
     writeFixture(dir, "a.zip", entries = 2)
-    val splits = ZipEntrySplits.listEntries(spark, s"${dir.getAbsolutePath}/a.zip")
+    val splits = ZipEntrySplits.listEntries(hadoopConf, s"${dir.getAbsolutePath}/a.zip")
     assert(splits.map(_.entry).toSet === Set("part1.bin", "part2.bin", "stored.txt"))
     splits.foreach { s =>
       assert(s.localHeaderOffset >= 0 && s.compressedSize > 0)
@@ -99,7 +121,7 @@ class ZipSplitSpec extends AnyFunSuite {
     }
     java.nio.file.Files.write(f.toPath, bytes)
     val e = intercept[IllegalArgumentException] {
-      ZipEntrySplits.listEntries(spark, f.getAbsolutePath)
+      ZipEntrySplits.listEntries(hadoopConf, f.getAbsolutePath)
     }
     assert(e.getMessage.contains("truncated central directory"))
   }
@@ -110,16 +132,20 @@ class ZipSplitSpec extends AnyFunSuite {
     val out = new FileOutputStream(f)
     out.write(Array.fill(100)(7.toByte)); out.close()
     val e = intercept[IllegalArgumentException] {
-      ZipEntrySplits.listEntries(spark, f.getAbsolutePath)
+      ZipEntrySplits.listEntries(hadoopConf, f.getAbsolutePath)
     }
     assert(e.getMessage.contains("end-of-central-directory"))
+    // a literal path that does not exist is an error, not an empty listing
+    intercept[java.io.FileNotFoundException] {
+      ZipEntrySplits.listEntries(hadoopConf, new File(dir, "absent.zip").getAbsolutePath)
+    }
   }
 
   // ------------------------------------------------- graft-zip DataSourceV2
   test("graft-zip connector: one partition per entry, bytes match the expansion") {
     val dir = tmpDir()
-    writeFixture(dir, "dsv2.zip", entries = 6)
-    val path = new File(dir, "dsv2.zip").getAbsolutePath
+    val zip = writeFixture(dir, "dsv2.zip", entries = 6)
+    val path = zip.getAbsolutePath
     val df = spark.read.format("graft-zip").load(path)
     assert(df.schema.fieldNames.toSeq ===
       Seq("archive", "entry", "size", "content"))
@@ -128,8 +154,7 @@ class ZipSplitSpec extends AnyFunSuite {
     val got = df.collect()
       .map(r => r.getAs[String]("entry") ->
         (r.getAs[Long]("size"), r.getAs[Array[Byte]]("content").toSeq)).toMap
-    val expect = ZipEntrySplits.expand(spark, path).collect()
-      .map(e => e.entry -> e.content.toSeq).toMap
+    val expect = jdkEntries(zip)
     assert(got.keySet === expect.keySet)
     got.foreach { case (entry, (size, bytes)) =>
       assert(bytes === expect(entry), entry)
@@ -157,13 +182,109 @@ class ZipSplitSpec extends AnyFunSuite {
     writeFixture(dir, "filter.zip", entries = 5)
     val path = new File(dir, "filter.zip").getAbsolutePath
     val df = spark.read.format("graft-zip").load(path)
-      .filter(org.apache.spark.sql.functions.col("entry").endsWith(".bin"))
+      .filter(col("entry").endsWith(".bin"))
     // 5 part*.bin entries; stored.txt pruned BEFORE partition planning
     assert(df.rdd.getNumPartitions === 5)
     assert(df.count() === 5)
     val one = spark.read.format("graft-zip").load(path)
-      .filter(org.apache.spark.sql.functions.col("entry") === "part3.bin")
+      .filter(col("entry") === "part3.bin")
     assert(one.rdd.getNumPartitions === 1)
     assert(one.select("size").head().getLong(0) === 1003L)
+  }
+
+  // ------------------------------------------- CRC-32 and zip64 (one reader)
+  test("a flipped byte in a stored entry fails graft-zip and ensureCsv with a CRC error") {
+    val dir = tmpDir()
+    val f = new File(dir, "flip.zip")
+    val payload = "a,b\n1,2\n3,4\n".getBytes("UTF-8")
+    val crc = new CRC32(); crc.update(payload)
+    val zos = new ZipOutputStream(new FileOutputStream(f))
+    val se = new ZipEntry("data.csv")
+    se.setMethod(ZipEntry.STORED)
+    se.setSize(payload.length); se.setCompressedSize(payload.length)
+    se.setCrc(crc.getValue)
+    zos.putNextEntry(se); zos.write(payload); zos.closeEntry()
+    zos.close()
+    val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+    val at = bytes.indexOfSlice(payload.toSeq) + 4 // the '1' of the first data row
+    bytes(at) = '9'.toByte
+    java.nio.file.Files.write(f.toPath, bytes)
+
+    val e1 = intercept[Throwable] { graftZip(f.getAbsolutePath) }
+    assert(messages(e1).exists(_.contains("invalid entry CRC")), e1.toString)
+    val csv = new File(dir, "out/data.csv")
+    val e2 = intercept[java.util.zip.ZipException] {
+      IngestPipeline.ensureCsv(IngestPipeline.Config(csv.getPath, Some(f.getPath), "unused"))
+    }
+    assert(e2.getMessage.contains("invalid entry CRC"))
+    // no corrupt CSV is left for a later warm run to pick up
+    assert(!csv.exists())
+  }
+
+  test("zip64: an archive of 70,000 entries lists fully and reads its last entry") {
+    val dir = tmpDir()
+    val f = new File(dir, "many.zip")
+    val n = 70000 // past 65 535: ZipOutputStream writes the zip64 end records
+    val zos = new ZipOutputStream(new java.io.BufferedOutputStream(new FileOutputStream(f)))
+    (0 until n).foreach { i =>
+      zos.putNextEntry(new ZipEntry(f"e$i%05d.txt"))
+      zos.write(i.toString.getBytes("UTF-8"))
+      zos.closeEntry()
+    }
+    zos.close()
+    val splits = ZipEntrySplits.listEntries(hadoopConf, f.getAbsolutePath)
+    assert(splits.length === n)
+    assert(splits.last.entry === "e69999.txt")
+    val last = spark.read.format("graft-zip").load(f.getAbsolutePath)
+      .filter(col("entry") === "e69999.txt")
+    assert(last.rdd.getNumPartitions === 1)
+    assert(new String(last.head().getAs[Array[Byte]]("content"), "UTF-8") === "69999")
+  }
+
+  test("zip64 extra field: sizes and offset come from a hand-built central record") {
+    // one deflated entry, after a 7-byte preamble, whose central record
+    // saturates all three 32-bit fields; the real (all different) values
+    // sit in the zip64 extra field (id 0x0001), after an unrelated extra
+    // block the parser must step over
+    val payload = ("zip64 payload " * 20).getBytes("UTF-8")
+    val deflater = new java.util.zip.Deflater(9, true)
+    deflater.setInput(payload); deflater.finish()
+    val packed = new Array[Byte](1024)
+    val csize = deflater.deflate(packed)
+    deflater.end()
+    val name = "wide.txt".getBytes("UTF-8")
+    val crc = new CRC32(); crc.update(payload)
+    val buf = ByteBuffer.allocate(2048).order(ByteOrder.LITTLE_ENDIAN)
+    buf.put(new Array[Byte](7))
+    // local header (its sizes are ignored by the reader)
+    buf.putInt(0x04034b50).putShort(45.toShort).putShort(0.toShort).putShort(8.toShort)
+      .putInt(0).putInt(crc.getValue.toInt).putInt(csize).putInt(payload.length)
+      .putShort(name.length.toShort).putShort(0.toShort).put(name).put(packed, 0, csize)
+    val cdOffset = buf.position()
+    buf.putInt(0x02014b50).putShort(45.toShort).putShort(45.toShort).putShort(0.toShort)
+      .putShort(8.toShort).putInt(0).putInt(crc.getValue.toInt)
+      .putInt(-1).putInt(-1) // compressed / uncompressed size: see zip64 extra
+      .putShort(name.length.toShort).putShort((9 + 28).toShort).putShort(0.toShort)
+      .putShort(0.toShort).putShort(0.toShort).putInt(0)
+      .putInt(-1) // local header offset: see zip64 extra
+      .put(name)
+      .putShort(0x5455.toShort).putShort(5.toShort).put(1.toByte).putInt(0) // timestamp
+      .putShort(1.toShort).putShort(24.toShort) // zip64: usize, csize, offset
+      .putLong(payload.length).putLong(csize).putLong(7L)
+    val cdSize = buf.position() - cdOffset
+    buf.putInt(0x06054b50).putShort(0.toShort).putShort(0.toShort)
+      .putShort(1.toShort).putShort(1.toShort).putInt(cdSize).putInt(cdOffset)
+      .putShort(0.toShort)
+    val f = new File(tmpDir(), "hand64.zip")
+    java.nio.file.Files.write(f.toPath, java.util.Arrays.copyOf(buf.array(), buf.position()))
+
+    val Seq(split) = ZipEntrySplits.listEntries(hadoopConf, f.getAbsolutePath)
+    assert(split.entry === "wide.txt")
+    assert(split.localHeaderOffset === 7L)
+    assert(split.compressedSize === csize.toLong)
+    assert(csize < payload.length)
+    assert(split.uncompressedSize === payload.length.toLong)
+    assert(split.crc === crc.getValue)
+    assert(graftZip(f.getAbsolutePath) === Map("wide.txt" -> payload.toSeq))
   }
 }
