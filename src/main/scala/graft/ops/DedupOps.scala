@@ -252,7 +252,12 @@ object DedupOps {
     * shuffle-hash verify attaches, per-bucket neighbor-chain cap),
     * different (and SQL-renderable) blocking family. This is the q36
     * pipeline since round 7; the fused xxhash64 form above remains the
-    * API's scale path and is spec-pinned separately. */
+    * API's scale path and is spec-pinned separately.
+    *
+    * Construct and run the returned plan before the next
+    * [[graft.Transients.drop]]: construction already cuts an intermediate
+    * (a `localCheckpoint` by default) and tracks it there, so a plan built
+    * before a drop and run after it fails on the missing blocks. */
   def minhashNearDupPairsMd5(docs: DataFrame, k: Int = 64, bands: Int = 16,
                              threshold: Double = 0.8,
                              maxBucketNeighbors: Int = Int.MaxValue): DataFrame = {
@@ -300,7 +305,12 @@ object DedupOps {
     * the engine-level analogue of a materialized view. Bounded: one entry
     * per corpus, ~3 narrow columns per pair. Every persisted frame is
     * unpersisted and evicted when its session's application ends (or on an
-    * explicit [[evict]]), so a long-lived JVM can't accrete pinned blocks. */
+    * explicit [[evict]]), so a long-lived JVM can't accrete pinned blocks.
+    * A cached frame's lineage runs through a cut that the first
+    * [[graft.Transients.drop]] releases. On a cluster, recomputing it
+    * after a later block loss (an executor death) therefore needs
+    * `spark.graft.reliableCheckpointDir`; with the default
+    * `localCheckpoint` that recompute fails. */
   private val pairCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   /** All frames this module persisted per session, for end-of-app cleanup
@@ -555,7 +565,12 @@ object DedupOps {
     * persist barrier intervenes — and unlike q36, this pipeline has no
     * other reason to persist. The shingle projection computes once under
     * the (exchange-reused) bucket join and once per verify-attach side;
-    * all three are map-side codegen. */
+    * all three are map-side codegen.
+    *
+    * Construct and run the returned plan before the next
+    * [[graft.Transients.drop]]: construction already cuts an intermediate
+    * (a `localCheckpoint` by default) and tracks it there, so a plan built
+    * before a drop and run after it fails on the missing blocks. */
   def ngramNearDupPairs(docs: DataFrame, n: Int = 3, k: Int = 64, bands: Int = 32,
                         threshold: Double = 0.5,
                         maxBucketNeighbors: Int = Int.MaxValue): DataFrame = {
@@ -821,7 +836,12 @@ object DedupOps {
     * asymmetric (each cross-side pair then occurs exactly once because
     * only one side can be doc_a). The prefix-filter recall theorem is
     * per-pair, so restricting which pairs are ENUMERATED cannot lose any
-    * qualifying pair that satisfies the condition. */
+    * qualifying pair that satisfies the condition.
+    *
+    * Construct and run the returned plan before the next
+    * [[graft.Transients.drop]]: construction already cuts an intermediate
+    * (a `localCheckpoint` by default) and tracks it there, so a plan built
+    * before a drop and run after it fails on the missing blocks. */
   def ppjoinPairs(docs: DataFrame, n: Int = 3,
                   tNum: Int = 1, tDen: Int = 2,
                   bFilter: Column = lit(true),

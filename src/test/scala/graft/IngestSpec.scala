@@ -3,7 +3,14 @@ package graft
 import java.io.{File, FileOutputStream}
 import java.nio.file.Files
 import java.util.zip.{ZipEntry, ZipOutputStream}
-import org.apache.spark.sql.AnalysisException
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.SparkException
+import org.apache.spark.sql.{AnalysisException, Row}
+import org.apache.spark.sql.functions.{col, xxhash64}
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ingest._
 
@@ -41,6 +48,107 @@ class IngestSpec extends AnyFunSuite {
     assert(written.columns.toSeq === AirQualitySchema.projectedColumns)
     // single-file contract (O6): exactly one part file
     assert(out.listFiles().count(_.getName.endsWith(".parquet")) === 1)
+  }
+
+  private def parquetFiles(out: File): Seq[File] =
+    out.listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
+
+  test("parallel write: one file of several row groups, rows in coalesce(1) order") {
+    val dir = tmpDir()
+    val in = new File(dir, "in")
+    in.mkdir()
+    // three sizes, so the scan's size-descending split order matters
+    Seq(300, 200, 100).zipWithIndex.foreach { case (n, i) =>
+      writeCsv(in, s"f$i.csv", header + "\n" + csvBody(n).replace("\"id", s"\"f$i-id"))
+    }
+    val out = new File(dir, "out")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "8k")
+    val expected = try {
+      IngestPipeline.run(spark, IngestPipeline.Config(in.getPath, None, out.getPath))
+      IngestPipeline.project(IngestPipeline.readCsv(spark, in.getPath)).coalesce(1).collect()
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val files = parquetFiles(out)
+    assert(files.size === 1)
+    assert(!new File(out, "_staging").exists())
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(files.head.getPath), new Configuration()))
+    try assert(reader.getRowGroups.size >= 2)
+    finally reader.close()
+    val written = spark.read.parquet(files.head.getPath).collect()
+    assert(written.length === 600)
+    assert(written.toSeq === expected.toSeq)
+  }
+
+  test("a value outside the sampled type fails the run and names the column") {
+    val dir = tmpDir()
+    def row(i: Int, no2: String) =
+      (Seq("\"2020-01-01\"", no2) ++ (1 until 16).map(j => (i * 16 + j) / 10.0) ++
+        Seq(s""""C$i"""", s""""id$i"""")).mkString(",")
+    // NO2 is integral through the sample and well past it, then 1.5
+    val body = (0 until 1200).map(i => row(i, i.toString)) :+ row(1200, "1.5")
+    val csv = writeCsv(dir, "data.csv", (header +: body).mkString("\n"))
+    val e = intercept[SparkException] {
+      IngestPipeline.run(spark,
+        IngestPipeline.Config(csv.getPath, None, new File(dir, "out").getPath))
+    }
+    assert(e.getMessage.contains("`NO2`"), e.getMessage)
+  }
+
+  test("round-trip oracle: ingest(csv(T)) equals T by row hash, explicit schema") {
+    val schema = StructType(StructField("Date", DateType) +:
+      AirQualitySchema.projectedColumns.slice(1, 7).map(StructField(_, DoubleType)) :+
+      StructField("station_name", StringType))
+    val rnd = new scala.util.Random(7)
+    def value(): Double = { val k = rnd.nextInt(100000); (if (k % 100 == 0) k + 1 else k) / 100.0 }
+    val t = (0 until 900).map { i =>
+      val date = java.time.LocalDate.of(2019, 1, 1).plusDays(rnd.nextInt(900).toLong)
+      val nums = Seq.fill(6)(value()).zipWithIndex
+        .map { case (d, j) => if (j == 0 && i % 37 == 5) null else d }
+      Row.fromSeq(java.sql.Date.valueOf(date) +: nums :+ s"Station ${i % 13}, Porto")
+    }
+    def cell(v: Any): String = v match {
+      case null => ""
+      case s: String => "\"" + s + "\""
+      case d: java.sql.Date => "\"" + d.toLocalDate + "\""
+      case x => x.toString
+    }
+    val dir = tmpDir()
+    val in = new File(dir, "in")
+    in.mkdir()
+    // three files; the 11 columns outside the projection carry filler
+    Seq(t.slice(0, 450), t.slice(450, 750), t.slice(750, 900)).zipWithIndex.foreach {
+      case (rows, f) =>
+        writeCsv(in, s"t$f.csv", (header +: rows.map { r =>
+          (r.toSeq.map(cell) ++ (0 until 9).map(j => s"$j.5") ++ Seq("1", "\"x\"")).mkString(",")
+        }).mkString("\n"))
+    }
+    // the CSV order of the 19 columns puts the 8 projected ones first
+    assert(AirQualitySchema.expectedColumns.take(8) === AirQualitySchema.projectedColumns)
+    val out = new File(dir, "out")
+    IngestPipeline.run(spark, IngestPipeline.Config(in.getPath, None, out.getPath))
+    def hashes(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select(xxhash64(schema.fieldNames.toSeq.map(c => col(s"`$c`")): _*))
+        .collect().map(_.getLong(0)).toSeq.sorted
+    val want = spark.createDataFrame(java.util.Arrays.asList(t: _*), schema)
+    val got = spark.read.parquet(out.getPath)
+    // the sampled types are T's types, so the hashes compare like for like
+    assert(got.schema.map(f => (f.name, f.dataType)) === schema.map(f => (f.name, f.dataType)))
+    assert(got.count() === 900)
+    assert(hashes(got) === hashes(want))
+  }
+
+  test("header-only CSV: one Parquet file, the header's columns, all strings") {
+    val dir = tmpDir()
+    val csv = writeCsv(dir, "data.csv", header + "\n")
+    val out = new File(dir, "out")
+    IngestPipeline.run(spark, IngestPipeline.Config(csv.getPath, None, out.getPath))
+    assert(parquetFiles(out).size === 1)
+    val written = spark.read.parquet(out.getPath)
+    assert(written.count() === 0)
+    assert(written.schema.map(f => (f.name, f.dataType)) ===
+      AirQualitySchema.projectedColumns.map(_ -> StringType))
   }
 
   test("verifier: advisory — missing expected warns, unexpected extra noted, run proceeds") {
