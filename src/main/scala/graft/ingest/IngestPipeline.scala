@@ -1,23 +1,34 @@
 package graft.ingest
 
-import java.io.IOException
+import java.io.{FileNotFoundException, IOException, InputStream}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.collection.mutable.ArrayBuffer
 import scala.util.Try
+import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.hadoop.util.LineReader
 import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.{SparkException, SparkThrowable}
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, NullType, StringType, StructType}
 import org.slf4j.LoggerFactory
+import graft.ingest.ZipEntrySplits.EntrySplit
 
 /** The end-to-end parity pipeline — Spark rebuild of the reference's `main`
   * (/root/reference/src/main.rs:27-80):
   *
-  *   (cold) stream zip entries to CSV   | (warm: CSV already local, skip)
+  *   (cold) inflate zip entries to CSV  | (warm: CSV already local, skip)
   *   read CSV (header + sampled types)  | main.rs:36-42 short-circuit
   *   -> advisory schema verification (O4)
   *   -> 8-column projection (O5; missing column => AnalysisException, the
@@ -28,10 +39,15 @@ import org.slf4j.LoggerFactory
   *      joined by a raw row-group concatenation, see [[writeOneFile]])
   *
   * Differences by design (SURVEY.md §4.1 anti-optimizations, not copied):
+  *  - the zip entries inflate in parallel on driver threads, one per core,
+  *    into a hidden staging directory that is moved into place only once
+  *    every entry has passed its CRC check: extraction is all or nothing,
+  *    so a failed run never leaves a warm path behind (see [[extract]]);
   *  - verification reads plan metadata, and Catalyst's ColumnPruning
   *    pushes the projection into the CSV reader. Types come from a leading
-  *    sample, as Polars' `infer_schema_length` does, so the CSV is scanned
-  *    once (see [[readCsv]]);
+  *    sample, as Polars' `infer_schema_length` does, inferred on the driver
+  *    with Spark's own CSV inference classes and no Spark job, so the one
+  *    scan of the CSV is the write's (see [[readCsv]]);
   *  - no fsync-per-chunk download loop: the zip path is any Hadoop-FS URI
   *    (file:/, s3a://), read entry by entry through [[ZipEntrySplits]].
   */
@@ -56,36 +72,91 @@ object IngestPipeline {
 
   /** Warm/cold short-circuit (O7, main.rs:36): extract only if the CSV is
     * not already present. */
-  def ensureCsv(conf: Config): Unit =
-    if (Files.exists(Paths.get(conf.csvPath))) {
+  def ensureCsv(conf: Config): Unit = {
+    val warmKey = Paths.get(conf.csvPath)
+    if (Files.exists(warmKey)) {
       log.info("File already exists so skipping the data gathering")
     } else conf.zipPath match {
-      case Some(zip) =>
-        // a bare relative filename has no parent -> extract into the cwd
-        extract(zip, Option(Paths.get(conf.csvPath).getParent).getOrElse(Paths.get(".")))
+      case Some(zip) => extract(zip, warmKey)
       case None =>
         throw new IllegalArgumentException(
           s"${conf.csvPath} absent and no zip path configured")
     }
+  }
 
-  /** Stream every entry the listing keeps (flat names only — nested and
-    * traversal entries are never written) into `outDir`. An entry that
-    * fails its CRC check leaves no file behind, so a later warm run cannot
-    * pick up a corrupt CSV. */
-  private def extract(zip: String, outDir: Path): Unit = {
+  /** Inflate every entry the listing keeps (flat names only — nested and
+    * traversal entries are never written) into the warm key's directory,
+    * all or nothing.
+    *
+    * The entries stream through [[ZipEntrySplits.openEntry]] on a fixed pool
+    * of min(entries, cores) driver threads, each checking its entry's
+    * length and CRC-32 at end of stream, so memory is bounded by the
+    * threads' stream buffers, never by entry size. They land in a hidden
+    * staging directory: a sibling of that directory that is renamed into
+    * place whole, or, when it already exists, a directory inside it whose
+    * files are moved out with the warm key last. After any failure the
+    * staging directory is deleted, so the warm key is absent and no file of
+    * this extraction remains: the next run takes the cold path again. The
+    * first failure, in entry order, is rethrown as is (a CRC error stays a
+    * ZipException naming its entry) once every thread has stopped. An entry
+    * name listed twice keeps its last copy. */
+  private def extract(zip: String, warmKey: Path): Unit = {
     // the active session's conf carries spark.hadoop.* (s3a credentials)
     val hadoopConf = SparkSession.getActiveSession
       .fold(new Configuration())(_.sparkContext.hadoopConfiguration)
-    Files.createDirectories(outDir)
-    ZipEntrySplits.listEntries(hadoopConf, zip).foreach { split =>
-      val target = outDir.resolve(split.entry)
-      val in = ZipEntrySplits.openEntry(hadoopConf, split)
-      try Files.copy(in, target, StandardCopyOption.REPLACE_EXISTING)
-      catch { case e: Throwable => Files.deleteIfExists(target); throw e }
-      finally in.close()
-      log.info(s"Extracted ${split.entry}")
-    }
+    // one file per name, the last copy's, as sequential overwrites gave
+    val entries = ZipEntrySplits.listEntries(hadoopConf, zip).reverse.distinctBy(_.entry).reverse
+    // a bare relative filename has no parent -> extract into the cwd
+    val target = Option(warmKey.getParent).getOrElse(Paths.get(".")).toAbsolutePath.normalize
+    val existed = Files.isDirectory(target)
+    val home = if (existed) target else target.getParent
+    Files.createDirectories(home)
+    val staging = Files.createTempDirectory(home, ".extracting-")
+    try {
+      inflateAll(hadoopConf, entries, staging)
+      if (!existed) Files.move(staging, target, StandardCopyOption.ATOMIC_MOVE)
+      else {
+        val key = warmKey.toAbsolutePath.normalize
+        val moved = ArrayBuffer.empty[Path]
+        try entries.map(_.entry).sortBy(e => target.resolve(e) == key).foreach { e =>
+          moved += Files.move(staging.resolve(e), target.resolve(e),
+            StandardCopyOption.REPLACE_EXISTING)
+        } catch { case e: Throwable => moved.foreach(Files.deleteIfExists); throw e }
+      }
+      entries.foreach(s => log.info(s"Extracted ${s.entry}"))
+    } finally graft.FsUtil.deleteRec(staging) // gone already after a whole-directory move
   }
+
+  private def inflateAll(conf: Configuration, entries: Seq[EntrySplit], dir: Path): Unit =
+    if (entries.nonEmpty) {
+      val pool = Executors.newFixedThreadPool(
+        math.min(entries.size, Runtime.getRuntime.availableProcessors), { (r: Runnable) =>
+          val t = new Thread(r, "ingest-extract")
+          t.setDaemon(true)
+          t
+        })
+      val failed = new AtomicBoolean(false)
+      try {
+        val tasks = entries.map { split =>
+          pool.submit(new Callable[Unit] {
+            def call(): Unit = if (!failed.get) try {
+              val in = ZipEntrySplits.openEntry(conf, split)
+              try Files.copy(in, dir.resolve(split.entry)) finally in.close()
+            } catch { case e: Throwable => failed.set(true); throw e }
+          })
+        }
+        val errors = tasks.flatMap { t =>
+          try { t.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+        }
+        errors.headOption.foreach { first =>
+          errors.tail.foreach(first.addSuppressed)
+          throw first
+        }
+      } finally {
+        pool.shutdownNow()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+      }
+    }
 
   /** Records in the leading sample the column types are inferred from.
     * Polars' `infer_schema_length` defaults to 100; a thousand lines cost
@@ -97,12 +168,13 @@ object IngestPipeline {
     * chars (2 MB), is one humongous G1 allocation per file split. */
   private val ParserBufferChars = "8192"
 
+  private val csvOptions = Map("header" -> "true", "inputBufferSize" -> ParserBufferChars)
+
   /** Header + sampled schema, after the reference's CsvReadOptions defaults
-    * (main.rs:83-87). The types are Spark's own CSV inference, in one task,
-    * over the header and the first [[SampleRecords]] records the scan
-    * reads: the start of the file whose header names the columns, and the
-    * next file the scan reads only if that one holds fewer records. The
-    * full input is then read once, under that schema.
+    * (main.rs:83-87). The types come from [[inferSchema]] over the
+    * [[sampleLines]]: the header and the first [[SampleRecords]] records,
+    * read and inferred on the driver without a Spark job. The full input is
+    * then read once, under that schema, by the job that consumes it.
     *
     * Malformed-row policy: FAILFAST, as Polars fails a read whose later
     * value does not fit the sampled type. A projected value that does not
@@ -110,12 +182,74 @@ object IngestPipeline {
     * [[run]] names the column. Spark parses only the fields a query
     * selects. In [[run]] that is the projection, so values outside it are
     * not checked, nor is a row's field count. */
-  def readCsv(spark: SparkSession, path: String): DataFrame = {
-    val sample = spark.read.textFile(path).take(SampleRecords + 1)
-    def reader = spark.read.option("header", "true").option("inputBufferSize", ParserBufferChars)
-    val schema = reader.option("inferSchema", "true")
-      .csv(spark.createDataset(sample.toSeq)(Encoders.STRING).coalesce(1)).schema
-    reader.option("mode", "FAILFAST").schema(schema).csv(path)
+  def readCsv(spark: SparkSession, path: String): DataFrame =
+    spark.read.options(csvOptions).option("mode", "FAILFAST")
+      .schema(inferSchema(spark, sampleLines(spark, path))).csv(path)
+
+  /** The first [[SampleRecords]] + 1 lines the scan reads, in its order:
+    * the files under `path` (a file, directory or glob; names starting with
+    * `_` or `.` skipped, as Spark's file index does), largest first, ties
+    * by path, each decompressed by the codec its name selects (`.gz`, ...)
+    * and split into lines as the text reader splits them. The next file is
+    * read only if the ones before it hold too few lines. Throws
+    * FileNotFoundException if `path` matches no file. */
+  private[graft] def sampleLines(spark: SparkSession, path: String): Seq[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new HPath(path)
+    val fs = root.getFileSystem(conf)
+    def visible(st: FileStatus) = !st.getPath.getName.startsWith("_") &&
+      !st.getPath.getName.startsWith(".")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.filter(visible).flatMap(leaves)
+      else Seq(st)
+    val files = Option(fs.globStatus(root)).toSeq.flatten.flatMap(leaves)
+      .sortBy(st => (-st.getLen, st.getPath.toString))
+    if (files.isEmpty) throw new FileNotFoundException(s"$path: no CSV file to read")
+    val codecs = new CompressionCodecFactory(conf)
+    val lines = ArrayBuffer.empty[String]
+    files.iterator.takeWhile(_ => lines.size <= SampleRecords).foreach { st =>
+      val raw = fs.open(st.getPath)
+      var in: InputStream = raw
+      try {
+        // a codec stream returns its pooled decompressor when closed
+        in = Option(codecs.getCodec(st.getPath)).fold(in)(_.createInputStream(raw))
+        val reader = new LineReader(in)
+        val line = new Text
+        val start = lines.size
+        while (lines.size <= SampleRecords && reader.readLine(line) > 0) lines += line.toString
+        // the text reader drops a UTF-8 byte-order mark at the start of a file
+        if (lines.size > start) lines(start) = lines(start).stripPrefix("\uFEFF")
+      } finally in.close()
+    }
+    lines.toSeq
+  }
+
+  /** The schema `spark.read.option("header", "true").option("inferSchema",
+    * "true").csv(lines)` infers, computed on the driver with no job. It
+    * follows Spark's `TextInputCSVDataSource.inferFromDataset` step by
+    * step: the first non-empty line is the header, made safe (empty and
+    * duplicate names renamed); lines equal to it are dropped; the column
+    * types fold over the rest with `CSVInferSchema.inferRowType`. No line
+    * gives an empty schema. These are Spark internals: IngestSpec compares
+    * the result with Spark's own inference on every fixture. */
+  private[graft] def inferSchema(spark: SparkSession, lines: Seq[String]): StructType = {
+    val sqlConf = spark.sessionState.conf
+    SQLConf.withExistingConf(sqlConf) {
+      val options = new CSVOptions(csvOptions + ("inferSchema" -> "true"),
+        sqlConf.csvColumnPruning, sqlConf.sessionLocalTimeZone)
+      val parser = new CsvParser(options.asParserSettings)
+      val rows = CSVUtils.filterCommentAndEmpty(lines.iterator, options).toSeq
+      rows.headOption.flatMap(first => Option(parser.parseLine(first)).map(first -> _)) match {
+        case Some((first, names)) =>
+          val header = CSVUtils.makeSafeHeader(names, sqlConf.caseSensitiveAnalysis, options)
+          val infer = new CSVInferSchema(options)
+          val types = CSVUtils.filterHeaderLine(rows.iterator, first, options)
+            .map(parser.parseLine)
+            .foldLeft(Array.fill[DataType](header.length)(NullType))(infer.inferRowType)
+          StructType(infer.toStructFields(types, header))
+        case None => StructType(Nil)
+      }
+    }
   }
 
   /** The O5 projection. Missing column -> AnalysisException (fail-hard).

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkException
-import org.apache.spark.sql.{AnalysisException, Row}
+import org.apache.spark.sql.{AnalysisException, Encoders, Row}
 import org.apache.spark.sql.functions.{col, xxhash64}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -149,6 +149,59 @@ class IngestSpec extends AnyFunSuite {
     assert(written.count() === 0)
     assert(written.schema.map(f => (f.name, f.dataType)) ===
       AirQualitySchema.projectedColumns.map(_ -> StringType))
+  }
+
+  /** The driver's sample must be the lines the text scan reads first, and
+    * its inference must equal Spark's CSV inference over those lines. */
+  private def assertSparkInference(path: String): StructType = {
+    val lines = IngestPipeline.sampleLines(spark, path)
+    assert(lines === spark.read.textFile(path).take(1001).toSeq)
+    val want = spark.read.option("header", "true").option("inferSchema", "true")
+      .csv(spark.createDataset(lines)(Encoders.STRING)).schema
+    val got = IngestPipeline.inferSchema(spark, lines)
+    assert(got === want)
+    got
+  }
+
+  test("driver inference equals Spark's CSV inference over the same sample") {
+    val dir = tmpDir()
+    // the air-quality layout, past the sample, with a byte-order mark
+    val air = writeCsv(dir, "air.csv", "\uFEFF" + header + "\n" + csvBody(1500))
+    val airSchema = assertSparkInference(air.getPath)
+    assert(airSchema.fieldNames.toSeq === AirQualitySchema.expectedColumns)
+    assert(airSchema.map(_.dataType).toSet === Set(DateType, DoubleType, StringType))
+    // duplicate (also by case) and empty header names
+    assertSparkInference(writeCsv(dir, "dup.csv", "a,a,,b,B,\n1,2,3,x,4.5,\n6,7,8,y,9,z\n").getPath)
+    // header only
+    assert(assertSparkInference(writeCsv(dir, "hdr.csv", "p,q\n").getPath).map(_.dataType) ===
+      Seq(StringType, StringType))
+    // blank lines before the header and between records
+    assertSparkInference(
+      writeCsv(dir, "blank.csv", "\n\np,q\n\n1,2\n   \n3,4.5\n\n").getPath)
+    // gzip, decompressed as the scan does
+    val gz = new File(dir, "data.csv.gz")
+    val zout = new java.util.zip.GZIPOutputStream(new FileOutputStream(gz))
+    zout.write((header + "\n" + csvBody(40)).getBytes("UTF-8"))
+    zout.close()
+    assert(assertSparkInference(gz.getPath) === airSchema)
+    // a directory: largest file first, the sample runs into the next one
+    // (whose header line is dropped), hidden files are not read
+    val multi = new File(dir, "multi")
+    multi.mkdir()
+    writeCsv(multi, "big.csv", header + "\n" + csvBody(800))
+    writeCsv(multi, "small.csv", header + "\n" + csvBody(400).replace("\"C", "\"Z"))
+    writeCsv(multi, ".hidden.csv", "not,a,csv\n" * 5000)
+    writeCsv(multi, "_SUCCESS", "")
+    val lines = IngestPipeline.sampleLines(spark, multi.getPath)
+    assert(lines.size === 1001 && lines.count(_ == header) === 2 && lines(1000).contains("\"Z"))
+    assert(assertSparkInference(multi.getPath) === airSchema)
+    // no file to read
+    intercept[java.io.FileNotFoundException] {
+      IngestPipeline.sampleLines(spark, new File(dir, "absent.csv").getPath)
+    }
+    val empty = new File(dir, "empty")
+    empty.mkdir()
+    intercept[java.io.FileNotFoundException] { IngestPipeline.readCsv(spark, empty.getPath) }
   }
 
   test("verifier: advisory — missing expected warns, unexpected extra noted, run proceeds") {

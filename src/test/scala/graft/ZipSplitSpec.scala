@@ -19,6 +19,16 @@ class ZipSplitSpec extends AnyFunSuite {
     d.deleteOnExit(); d
   }
 
+  /** A STORED entry: the payload sits verbatim in the archive. */
+  private def putStored(zos: ZipOutputStream, name: String, payload: Array[Byte]): Unit = {
+    val crc = new CRC32(); crc.update(payload)
+    val se = new ZipEntry(name)
+    se.setMethod(ZipEntry.STORED)
+    se.setSize(payload.length); se.setCompressedSize(payload.length)
+    se.setCrc(crc.getValue)
+    zos.putNextEntry(se); zos.write(payload); zos.closeEntry()
+  }
+
   /** Archive with deflated + stored entries, a directory, and unsafe names. */
   private def writeFixture(dir: File, name: String, entries: Int): File = {
     val f = new File(dir, name)
@@ -28,14 +38,7 @@ class ZipSplitSpec extends AnyFunSuite {
       zos.write(Array.fill(1000 + i)((i % 251).toByte))
       zos.closeEntry()
     }
-    // a STORED (uncompressed) entry: requires size+crc up front
-    val stored = "stored entry payload".getBytes("UTF-8")
-    val crc = new CRC32(); crc.update(stored)
-    val se = new ZipEntry("stored.txt")
-    se.setMethod(ZipEntry.STORED)
-    se.setSize(stored.length); se.setCompressedSize(stored.length)
-    se.setCrc(crc.getValue)
-    zos.putNextEntry(se); zos.write(stored); zos.closeEntry()
+    putStored(zos, "stored.txt", "stored entry payload".getBytes("UTF-8"))
     // skipped by the flat-archive contract
     zos.putNextEntry(new ZipEntry("sub/dir/nested.bin"))
     zos.write(Array[Byte](1, 2, 3)); zos.closeEntry()
@@ -197,13 +200,8 @@ class ZipSplitSpec extends AnyFunSuite {
     val dir = tmpDir()
     val f = new File(dir, "flip.zip")
     val payload = "a,b\n1,2\n3,4\n".getBytes("UTF-8")
-    val crc = new CRC32(); crc.update(payload)
     val zos = new ZipOutputStream(new FileOutputStream(f))
-    val se = new ZipEntry("data.csv")
-    se.setMethod(ZipEntry.STORED)
-    se.setSize(payload.length); se.setCompressedSize(payload.length)
-    se.setCrc(crc.getValue)
-    zos.putNextEntry(se); zos.write(payload); zos.closeEntry()
+    putStored(zos, "data.csv", payload)
     zos.close()
     val bytes = java.nio.file.Files.readAllBytes(f.toPath)
     val at = bytes.indexOfSlice(payload.toSeq) + 4 // the '1' of the first data row
@@ -219,6 +217,84 @@ class ZipSplitSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("invalid entry CRC"))
     // no corrupt CSV is left for a later warm run to pick up
     assert(!csv.exists())
+  }
+
+  /** Flip one byte of a STORED entry's payload in place. */
+  private def flip(f: File, payload: Array[Byte]): Unit = {
+    val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+    val at = bytes.indexOfSlice(payload.take(32).toSeq) + 8
+    bytes(at) = (bytes(at) ^ 0x5a).toByte
+    java.nio.file.Files.write(f.toPath, bytes)
+  }
+
+  test("a failed extraction leaves no warm path and no file behind") {
+    val dir = tmpDir()
+    val f = new File(dir, "three.zip")
+    val last = "x,y\n7,8\n9,10\n11,12\n13,14\n15,16\n17,18\n19,20\n".getBytes("UTF-8")
+    val zos = new ZipOutputStream(new FileOutputStream(f))
+    putStored(zos, "p1.csv", "a,b\n1,2\n".getBytes("UTF-8"))
+    putStored(zos, "p2.csv", "a,b\n3,4\n".getBytes("UTF-8"))
+    putStored(zos, "p3.csv", last)
+    zos.close()
+    flip(f, last)
+    // directory-style warm key: `<dir>/csv` itself, as the benchmark uses
+    val conf = IngestPipeline.Config(s"${dir.getPath}/csv/.", Some(f.getPath), "unused")
+    val e = intercept[java.util.zip.ZipException] { IngestPipeline.ensureCsv(conf) }
+    assert(e.getMessage.contains("'p3.csv'") && e.getMessage.contains("invalid entry CRC"))
+    assert(!new File(dir, "csv").exists())
+    assert(dir.list().toSeq === Seq("three.zip"))
+    // the next run takes the cold path again instead of ingesting p1 and p2
+    intercept[java.util.zip.ZipException] { IngestPipeline.ensureCsv(conf) }
+    assert(dir.list().toSeq === Seq("three.zip"))
+    // file-style warm key inside a directory that already holds a file
+    val out = new File(dir, "out")
+    out.mkdir()
+    java.nio.file.Files.writeString(new File(out, "keep.txt").toPath, "kept")
+    intercept[java.util.zip.ZipException] {
+      IngestPipeline.ensureCsv(IngestPipeline.Config(
+        new File(out, "p3.csv").getPath, Some(f.getPath), "unused"))
+    }
+    assert(out.list().toSeq === Seq("keep.txt"))
+  }
+
+  test("parallel extraction equals java.util.zip.ZipFile; a middle CRC error names its entry") {
+    val dir = tmpDir()
+    val f = new File(dir, "many.zip")
+    val rnd = new scala.util.Random(11)
+    // 14 entries of 40-80 KB, stored and deflated alternating; half the
+    // bytes repeat so deflate has something to do
+    val payloads = (1 to 14).map { i =>
+      val b = new Array[Byte](40000 + rnd.nextInt(40000))
+      rnd.nextBytes(b)
+      java.util.Arrays.fill(b, 0, b.length / 2, (i % 7).toByte)
+      (s"e$i.csv", b.reverse)
+    }
+    val zos = new ZipOutputStream(new FileOutputStream(f))
+    payloads.zipWithIndex.foreach { case ((name, b), i) =>
+      if (i % 2 == 0) putStored(zos, name, b)
+      else { zos.putNextEntry(new ZipEntry(name)); zos.write(b); zos.closeEntry() }
+    }
+    zos.close()
+    val splits = ZipEntrySplits.listEntries(hadoopConf, f.getAbsolutePath)
+    assert(splits.map(_.method).toSet === Set(0, 8))
+    val out = new File(dir, "out")
+    IngestPipeline.ensureCsv(IngestPipeline.Config(
+      new File(out, "e1.csv").getPath, Some(f.getPath), "unused"))
+    val got = out.listFiles().map(x => x.getName -> java.nio.file.Files.readAllBytes(x.toPath).toSeq).toMap
+    assert(got === jdkEntries(f))
+    assert(got.size === 14)
+
+    // a corrupt STORED entry in the middle (index 6 of 14)
+    val (bad, badBytes) = payloads(6)
+    flip(f, badBytes)
+    val out2 = new File(dir, "out2")
+    val e = intercept[java.util.zip.ZipException] {
+      IngestPipeline.ensureCsv(IngestPipeline.Config(
+        new File(out2, "e1.csv").getPath, Some(f.getPath), "unused"))
+    }
+    assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("invalid entry CRC"),
+      e.getMessage)
+    assert(!out2.exists())
   }
 
   test("zip64: an archive of 70,000 entries lists fully and reads its last entry") {
