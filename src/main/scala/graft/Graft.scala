@@ -11,9 +11,30 @@ import org.apache.spark.sql.SparkSession
   *  - shuffle partitions sized to the environment, not the 200 default;
   *  - 128 MB scan partitions (spill-aware task sizing for wide parquet);
   *  - UTC session time (deterministic timestamp semantics);
+  *  - a generated-class cache sized to the engine's working set
+  *    ([[CodegenCacheEntries]]), so a JVM compiles each generated class
+  *    once;
   *  - the engine's native expressions pre-registered.
   */
 object Graft {
+
+  /** Size of Spark's JVM-wide generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). A key is
+    * (thread context class loader, source); in local mode the driver and
+    * the task threads key the same source under different loaders. At
+    * 100 entries LRU evicted every class before its reuse: each pass of
+    * the benchmark's 14 queries (about 366 keys) recompiled 352-366
+    * classes, 3.6-4.4 s of Janino in a 15-17 s pass. One run of all 282
+    * queries at sf0.1 makes 4,609 keys, and holding them all took 202 MB
+    * more heap after a full GC than the default did: already a tenth of
+    * the benchmark's 2 GiB heap, before the 2x headroom that Guava's
+    * per-segment eviction wants. So the size is 4096, 11x the benchmark
+    * pass and most of the full surface. Static conf:
+    * `CodeGenerator` sizes the cache from the first session's conf, so
+    * every session the engine builds sets it ([[sessionBuilder]], the
+    * test session); an executor takes it from the propagated SQL conf of
+    * its first task that generates code. */
+  val CodegenCacheEntries: Int = 4096
 
   def sessionBuilder(master: String = "local[*]",
                      shufflePartitions: Int = Runtime.getRuntime.availableProcessors)
@@ -38,6 +59,7 @@ object Graft {
           (16L * 1024 * 1024).toString))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       // recursive CTEs (q194) accumulate one row per chain element; the
       // 1M default tripped at sf1 (1.5M orders). The limit is a runaway
       // guard, not a memory bound — the UnionLoop materializes per-step

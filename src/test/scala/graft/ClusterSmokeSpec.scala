@@ -10,7 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * processes. This makes the closure-transport regression class — the
   * exact bug r12 found and fixed in Graft.sessionBuilder's classpath
   * absolutization — fail `sbt test` instead of waiting for the hand-run
-  * full cluster gate.
+  * full cluster gate. The child also fails when an executor's
+  * generated-class cache did not take the engine's size
+  * ([[Graft.CodegenCacheEntries]]): its verdict line then shows non-zero
+  * `executor_recompiles`.
   *
   * The child needs what tools/cluster_gate.sh stages: a SPARK_HOME whose
   * layout the in-process standalone Worker can launch executors from

@@ -15,6 +15,8 @@ object TestSpark {
       // match Graft.sessionBuilder: the skewed edge corpus's hot
       // customers carry ~200-order chains, past the 100-level default
       .config("spark.sql.cteRecursionLevelLimit", "100000")
+      .config("spark.sql.codegen.cache.maxEntries",
+        Graft.CodegenCacheEntries.toString)
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
       .config("spark.ui.enabled", "false")
